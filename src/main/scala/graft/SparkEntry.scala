@@ -51,12 +51,8 @@ object SparkEntry {
           if fs.fileFormat.isInstanceOf[
             org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat] =>
           val conf = df.sparkSession.sessionState.newHadoopConf()
-          try fs.location.inputFiles.map { f =>
-            val in = org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-            val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-            try r.getRecordCount finally r.close()
-          }.sum
+          try fs.location.inputFiles.map(f =>
+            graft.sources.ParquetFooters.rowCount(new org.apache.hadoop.fs.Path(f), conf)).sum
           catch { case scala.util.control.NonFatal(_) => df.count() }
         case _ => df.count()
       }

@@ -50,7 +50,7 @@ object LabelPropagation {
   /** `ckpt` gives LPA the same durable resume contract as the Engine
     * loop (Engine.runLoop / north_rule resumability for the 4th algo):
     * resume from the latest complete snapshot, save every `ckpt.every`
-    * supersteps plus a final snapshot. */
+    * supersteps plus a final snapshot (RunSnapshots). */
   def runOnAdjacency(adj: Adjacency, maxIters: Int,
                      ckpt: Option[CheckpointManager] = None): RunResult = {
     // same loop-session clone as Engine.run (AQE off, hash joins,
@@ -68,10 +68,10 @@ object LabelPropagation {
                       ckpt: Option[CheckpointManager]): RunResult = {
     val spark = adj.out.sparkSession
     val metrics = ArrayBuffer.empty[IterMetrics]
-    val resumed = ckpt.flatMap(c => c.latestIter().map(i => (i, c.load(spark, i, "lpa"))))
-    var iter = resumed.map(_._1).getOrElse(0)
+    val snaps = CheckpointManager.open(ckpt, spark, "lpa")
+    var iter = snaps.resumed.map(_._1).getOrElse(0)
     var active = 0L
-    var state = resumed match {
+    var state = snaps.resumed match {
       case Some((_, st)) =>
         val s = st.localCheckpoint(true)
         active = s.filter(col("changed")).count()
@@ -145,12 +145,10 @@ object LabelPropagation {
       state = newState
       iter += 1
       metrics += IterMetrics(iter, active, (System.nanoTime() - t0) / 1000000, adj.numVertices)
-      ckpt.foreach { c =>
-        if (c.shouldCheckpoint(iter)) c.save("lpa", iter, state, metrics.toSeq)
-      }
+      snaps.afterSuperstep(iter, state, metrics.toSeq)
     }
     spark.sparkContext.clearJobGroup()
-    ckpt.foreach(c => c.save("lpa", iter, state, metrics.toSeq))
+    snaps.atEnd(iter, state, metrics.toSeq)
     if (prevState ne null) Engine.release(prevState)
     RunResult(state, iter, metrics.toSeq)
   }

@@ -12,22 +12,6 @@ final case class RunConfig(
       * (no vertex changed). Either way an empty frontier ends the run
       * early — further supersteps are provably no-ops. */
     maxIters: Int = 0,
-    /** Broadcast the message table instead of shuffling it when the
-      * messaging side has at most this many vertices — the Spark-native
-      * form of the reference's dense-bcast vs sparse-p2p switch
-      * (vp:194, 754-784). DEFAULT 0 (off, round 6): the state is
-      * hash(vid, parts)-co-partitioned with the adjacency by
-      * construction, so the SHUFFLE_HASH branch is already
-      * exchange-free — the broadcast bought nothing and cost one
-      * driver-side collect job + relation build PER SUPERSTEP
-      * (measured: q_pagerank_top 51→31 jobs and every frontier query
-      * faster with the flip off; broadcasting 10^6-row messages was
-      * additionally 5× slower than the co-partitioned shuffle). The
-      * flip remains available for callers whose message side is NOT
-      * co-partitioned (e.g. a resumed checkpoint with foreign
-      * partitioning), where one broadcast beats a per-superstep
-      * exchange. */
-    broadcastMaxVertices: Long = 0,
     ckpt: Option[CheckpointManager] = None)
 
 final case class RunResult(state: DataFrame, iterations: Int, metrics: Seq[IterMetrics]) {
@@ -40,7 +24,7 @@ final case class RunResult(state: DataFrame, iterations: Int, metrics: Seq[IterM
   * DataFrame message passing:
   *
   *   scatter_gather + bcast + combine (vp:688-861, 1058-1327)
-  *     → one gather join (broadcast or co-partitioned shuffle) over
+  *     → one co-partitioned shuffle-hash gather join over
   *       the CSR adjacency, explode, then partial+final hash
   *       aggregation keyed by destination (Spark's map-side combine IS
   *       the reference's per-rank partial accumulation, vp:1058-1113);
@@ -103,14 +87,13 @@ object Engine {
                       metrics: ArrayBuffer[IterMetrics]): RunResult = {
     val spark = adj.out.sparkSession
 
-    val resumed = cfg.ckpt.flatMap(c => c.latestIter().map(i =>
-      (i, c.load(spark, i, program.name))))
-    var iter = resumed.map(_._1).getOrElse(0)
+    val snaps = CheckpointManager.open(cfg.ckpt, spark, program.name)
+    var iter = snaps.resumed.map(_._1).getOrElse(0)
     // the initial active count rides the init-materializing job as a
     // CollectMetrics accumulator (same observe trick as the superstep
     // loop below) instead of a second count job
     var active = 0L
-    var state = resumed match {
+    var state = snaps.resumed match {
       case Some((_, st)) =>
         val s = st.localCheckpoint(true)
         active = s.filter(col("changed")).count()
@@ -151,25 +134,19 @@ object Engine {
       val msgSide = if (program.stationary) state else state.filter(col("changed"))
       val msgs0 = msgSide.select(col("vid"), program.message(msgSide).as("msg"))
       val sideSize = if (program.stationary) adj.numVertices else active
-      // Hint ONLY the shuffle branch: Spark keeps the outermost
-      // join-strategy hint, so a SHUFFLE_HASH hint applied on top of
-      // broadcast(msgs0) would silently override the broadcast and make
-      // small frontiers (BFS/SSSP/CC tails) pay a shuffle stage.
-      // No explicit repartition on the shuffle branch: state is an
-      // eager localCheckpoint whose LogicalRDD PRESERVES the hash(vid,
-      // parts) partitioning of the previous apply join, so the gather
-      // SHJ is already co-partitioned with the adjacency (hash(src,
-      // parts)) — an explicit repartition would add a second V-sized
-      // exchange per superstep. The planner inserts one itself in the
-      // (init/resume) cases where the partitioning is absent.
-      val msgs =
-        if (sideSize <= cfg.broadcastMaxVertices) broadcast(msgs0)
-        else msgs0.hint("SHUFFLE_HASH")
+      // No explicit repartition: state is an eager localCheckpoint
+      // whose LogicalRDD PRESERVES the hash(vid, parts) partitioning of
+      // the previous apply join, so the gather SHJ is already
+      // co-partitioned with the adjacency (hash(src, parts)) — an
+      // explicit repartition would add a second V-sized exchange per
+      // superstep. The planner inserts one itself in the (init/resume)
+      // cases where the partitioning is absent.
+      val msgs = msgs0.hint("SHUFFLE_HASH")
 
       // --- gather: join messages onto the persisted CSR adjacency
       // (adjacency never moves — it is hash-partitioned by src), explode
       // neighbor chunks, per-edge combine, then hash-aggregate by dst.
-      // SHUFFLE_HASH hint (shuffle branch only): the msgs side is a
+      // SHUFFLE_HASH hint: the msgs side is a
       // localCheckpoint LogicalRDD with unknown stats, so without the
       // hint the planner falls back to sort-merge and re-sorts BOTH
       // sides every superstep.
@@ -214,11 +191,7 @@ object Engine {
       spark.sparkContext.clearJobGroup()
       active = observed.queryExecution.observedMetrics.get(metricName) match {
         case Some(row) if !row.isNullAt(0) => row.getLong(0)
-        case other =>
-          if (sys.env.contains("GRAFT_DEBUG_OBSERVE"))
-            System.err.println(s"[engine] observe miss at iter $iter: $other " +
-              s"keys=${observed.queryExecution.observedMetrics.keySet}")
-          newState.filter(col("changed")).count() // fallback
+        case _ => newState.filter(col("changed")).count() // fallback
       }
       // Free the previous superstep's checkpoint blocks — newState is
       // fully materialized, so the old RDD is never read again. Without
@@ -229,14 +202,11 @@ object Engine {
       state = newState
       iter += 1
       metrics += IterMetrics(iter, active, (System.nanoTime() - t0) / 1000000, sideSize)
-
-      cfg.ckpt.foreach { c =>
-        if (c.shouldCheckpoint(iter)) c.save(program.name, iter, state, metrics.toSeq)
-      }
+      snaps.afterSuperstep(iter, state, metrics.toSeq)
     }
 
     spark.sparkContext.clearJobGroup()
-    cfg.ckpt.foreach(c => c.save(program.name, iter, state, metrics.toSeq))
+    snaps.atEnd(iter, state, metrics.toSeq)
     if (prevState ne null) release(prevState)
     RunResult(state, iter, metrics.toSeq)
   }

@@ -572,10 +572,9 @@ object SpmvKernel {
       val stationary = program.stationary
       val metrics = ArrayBuffer.empty[IterMetrics]
 
-      val resumed = ckpt.flatMap(c => c.latestIter().map(i =>
-        (i, c.load(spark, i, s"${program.name}-kernel"))))
-      if (resumed.isDefined && program.requiresExactVids) requireExactVids(program.name)
-      var state: RDD[PartState] = resumed
+      val snaps = graft.ckpt.CheckpointManager.open(ckpt, spark, s"${program.name}-kernel")
+      if (snaps.resumed.isDefined && program.requiresExactVids) requireExactVids(program.name)
+      var state: RDD[PartState] = snaps.resumed
         .map { case (_, df) => stateFromDF(width, program.columns, df) }
         .getOrElse(kernel.map { kp =>
           val n = kp.vids.length
@@ -600,7 +599,7 @@ object SpmvKernel {
         scala.collection.Map[Long, (Array[Double], Boolean)]] =
         if (init0._2 != null) sc.broadcast(init0._2) else null
       var prev: RDD[PartState] = null
-      var iter = resumed.map(_._1).getOrElse(0)
+      var iter = snaps.resumed.map(_._1).getOrElse(0)
 
       def keepGoing: Boolean =
         if (numVertices == 0) false
@@ -782,12 +781,9 @@ object SpmvKernel {
         state = newState
         iter += 1
         metrics += IterMetrics(iter, active, (System.nanoTime() - t0) / 1000000, frontier)
-        ckpt.foreach { c =>
-          if (c.shouldCheckpoint(iter))
-            c.save(s"${program.name}-kernel", iter, stateDF(width, program.columns, state), metrics.toSeq)
-        }
+        snaps.afterSuperstep(iter, stateDF(width, program.columns, state), metrics.toSeq)
       }
-      ckpt.foreach(c => c.save(s"${program.name}-kernel", iter, stateDF(width, program.columns, state), metrics.toSeq))
+      snaps.atEnd(iter, stateDF(width, program.columns, state), metrics.toSeq)
 
       // deterministic checksum: per-partition sums folded in partition
       // order (first state column, NaN skipped)
@@ -858,10 +854,9 @@ object SpmvKernel {
       // never exported (stateDF takes cols.length = 1 leading columns).
       val width = 2
       val metrics = ArrayBuffer.empty[IterMetrics]
-      val resumed = ckpt.flatMap(c => c.latestIter().map(i =>
-        (i, c.load(spark, i, "lpa-kernel"))))
-      if (resumed.isDefined) requireExactVids("lpa")
-      var state: RDD[PartState] = resumed
+      val snaps = graft.ckpt.CheckpointManager.open(ckpt, spark, "lpa-kernel")
+      if (snaps.resumed.isDefined) requireExactVids("lpa")
+      var state: RDD[PartState] = snaps.resumed
         .map { case (_, df) =>
           // snapshots carry (vid, label, changed) only; widen to
           // [label, NaN] — the full-mode superstep below rebuilds the
@@ -899,7 +894,7 @@ object SpmvKernel {
         scala.collection.Map[Long, (Array[Double], Boolean)]] =
         if (init0._2 != null) sc.broadcast(init0._2) else null
       var prev: RDD[PartState] = null
-      var iter = resumed.map(_._1).getOrElse(0)
+      var iter = snaps.resumed.map(_._1).getOrElse(0)
       // A superstep runs FULL (every source ships its tile's complete
       // label counts; the destination side rebuilds the persistent
       // LabelTable from scratch and arg-maxes every fed vertex —
@@ -1052,12 +1047,9 @@ object SpmvKernel {
         state = newState
         iter += 1
         metrics += IterMetrics(iter, active, (System.nanoTime() - t0) / 1000000, numVertices)
-        ckpt.foreach { c =>
-          if (c.shouldCheckpoint(iter))
-            c.save("lpa-kernel", iter, stateDF(width, cols, state), metrics.toSeq)
-        }
+        snaps.afterSuperstep(iter, stateDF(width, cols, state), metrics.toSeq)
       }
-      ckpt.foreach(c => c.save("lpa-kernel", iter, stateDF(width, cols, state), metrics.toSeq))
+      snaps.atEnd(iter, stateDF(width, cols, state), metrics.toSeq)
 
       val partSums = sc.runJob(state, (it: Iterator[PartState]) => {
         val ps = it.next()

@@ -74,7 +74,7 @@ class PageRankSpec extends SparkTestBase {
     val adj = Adjacency.build(edgesDF(es), parts)
     val degrees = Degree.outFromAdjacency(adj)
     val r = Engine.run(adj, new PageRankProgram(degrees, 0.15, 1e-5),
-      RunConfig(maxIters = 15, broadcastMaxVertices = 0)) // force co-partitioned shuffle join
+      RunConfig(maxIters = 15))
     val got = r.state.select("vid", "rank").collect()
       .map(row => row.getLong(0) -> row.getDouble(1)).toMap
     adj.unpersist()

@@ -1,6 +1,9 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.functions.lit
+import graft.ingest.Rmat
+import graft.sources.EdgeListSource
 import graft.tools.Apps
 
 /** The CLI drop-in (graft.tools.Apps) must run every reference app
@@ -11,14 +14,38 @@ class AppsSpec extends SparkTestBase {
 
   private val sampleBin = "/root/reference/data/rmat10_1024.bin"
 
+  /** A scale-9 RMAT graph (512 vertex ids, 4,096 records, parallel
+    * edges and self-loops kept) written in the reference's binary
+    * format: the sample-binary cases below run on it wherever the
+    * reference's own sample file is absent. */
+  private lazy val rmatBin: (String, Seq[(Long, Long)]) = {
+    val f = Files.createTempFile("graft-apps-rmat", ".bin").toString
+    EdgeListSource.writeBinary(
+      Rmat.edges(spark, scale = 9, edgeFactor = 8, seed = 5).withColumn("w", lit(1.0)), f)
+    val es = EdgeListSource.readBinary(spark, f).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    (f, es)
+  }
+
+  private def prDegTc(bin: String, numEdges: Long, triangles: Long): Unit = {
+    val pr = Apps.run(spark, "pr", bin, iters = 5, root = 0, parts, weighted = false)
+    assert(pr.iterations == 5 && pr.checksum > 0 && pr.top.size == 5)
+    val deg = Apps.run(spark, "deg", bin, iters = 0, root = 0, parts, weighted = false)
+    assert(deg.checksum == numEdges.toDouble) // Σ out-degree = E
+    val tc = Apps.run(spark, "tc", bin, iters = 0, root = 0, parts, weighted = false)
+    assert(tc.checksum == triangles.toDouble)
+  }
+
   test("pr/deg/tc over the reference sample binary") {
     assume(Files.exists(java.nio.file.Paths.get(sampleBin)))
-    val pr = Apps.run(spark, "pr", sampleBin, iters = 5, root = 0, parts, weighted = false)
-    assert(pr.iterations == 5 && pr.checksum > 0 && pr.top.size == 5)
-    val deg = Apps.run(spark, "deg", sampleBin, iters = 0, root = 0, parts, weighted = false)
-    assert(deg.checksum == 16384.0) // Σ out-degree = E
-    val tc = Apps.run(spark, "tc", sampleBin, iters = 0, root = 0, parts, weighted = false)
-    assert(tc.checksum == 78452.0) // the shipped sample graph's count (deterministic file)
+    // 78452: the shipped sample graph's count (deterministic file)
+    prDegTc(sampleBin, numEdges = 16384, triangles = 78452)
+  }
+
+  test("pr/deg/tc over a generated RMAT binary") {
+    val (bin, es) = rmatBin
+    assert(es.size == 4096)
+    prDegTc(bin, numEdges = es.size, triangles = ReferenceOracle.triangles(es))
   }
 
   test("bfs/cc/sssp over a text edge list with comments") {
@@ -40,14 +67,13 @@ class AppsSpec extends SparkTestBase {
     assert(sp.reachable.contains(4L) && sp.checksum == 0 + 1 + 3 + 4)
   }
 
-  test("kernel=true routes every app through the compiled path with unchanged checksums") {
-    assume(Files.exists(java.nio.file.Paths.get(sampleBin)))
+  private def kernelParity(bin: String, numEdges: Long): Unit = {
     // same assertions as the engine-path tests above — the kernel path
     // must be a checksum-for-checksum drop-in (VertexProgram contract
     // on compiled tiles, graph/SpmvKernel)
-    val pr = Apps.run(spark, "pr", sampleBin, iters = 5, root = 0, parts,
+    val pr = Apps.run(spark, "pr", bin, iters = 5, root = 0, parts,
       weighted = false, kernel = true)
-    val prEngine = Apps.run(spark, "pr", sampleBin, iters = 5, root = 0, parts,
+    val prEngine = Apps.run(spark, "pr", bin, iters = 5, root = 0, parts,
       weighted = false)
     assert(pr.iterations == 5 && math.abs(pr.checksum - prEngine.checksum) <= 1e-9)
     // same top-5 vertices; values agree to 1e-9 (the two paths sum
@@ -56,22 +82,22 @@ class AppsSpec extends SparkTestBase {
     pr.top.zip(prEngine.top).foreach { case ((_, a), (_, b)) =>
       assert(math.abs(a - b) <= 1e-9)
     }
-    val deg = Apps.run(spark, "deg", sampleBin, iters = 0, root = 0, parts,
+    val deg = Apps.run(spark, "deg", bin, iters = 0, root = 0, parts,
       weighted = false, kernel = true)
-    assert(deg.checksum == 16384.0) // Σ out-degree = E, same as the engine row
+    assert(deg.checksum == numEdges.toDouble) // Σ out-degree = E, same as the engine row
 
     // cache=<dir>: a second run of the same app loads the tile cache
     // instead of recompiling and must be checksum-identical; a second
     // APP on the same cache root must not collide (per-variant subdirs)
     val kc = Files.createTempDirectory("graft-apps-kcache").toString
-    val prC1 = Apps.run(spark, "pr", sampleBin, iters = 5, root = 0, parts,
+    val prC1 = Apps.run(spark, "pr", bin, iters = 5, root = 0, parts,
       weighted = false, kernel = true, cache = Some(kc))
-    val prC2 = Apps.run(spark, "pr", sampleBin, iters = 5, root = 0, parts,
+    val prC2 = Apps.run(spark, "pr", bin, iters = 5, root = 0, parts,
       weighted = false, kernel = true, cache = Some(kc))
     assert(prC1.checksum == prC2.checksum && prC1.checksum == pr.checksum)
-    val ccC = Apps.run(spark, "cc", sampleBin, iters = 0, root = 0, parts,
+    val ccC = Apps.run(spark, "cc", bin, iters = 0, root = 0, parts,
       weighted = false, kernel = true, cache = Some(kc))
-    val ccPlain = Apps.run(spark, "cc", sampleBin, iters = 0, root = 0, parts,
+    val ccPlain = Apps.run(spark, "cc", bin, iters = 0, root = 0, parts,
       weighted = false, kernel = true)
     assert(ccC.checksum == ccPlain.checksum && ccC.reachable == ccPlain.reachable)
 
@@ -100,5 +126,15 @@ class AppsSpec extends SparkTestBase {
       weighted = false)
     assert(lpaK.checksum == lpaE.checksum && lpaK.reachable == lpaE.reachable
       && lpaK.iterations == lpaE.iterations)
+  }
+
+  test("kernel=true routes every app through the compiled path with unchanged checksums") {
+    assume(Files.exists(java.nio.file.Paths.get(sampleBin)))
+    kernelParity(sampleBin, numEdges = 16384)
+  }
+
+  test("kernel=true parity with the engine over a generated RMAT binary") {
+    val (bin, es) = rmatBin
+    kernelParity(bin, numEdges = es.size)
   }
 }

@@ -1,6 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.graph._
 import graft.algos._
 import graft.ckpt.CheckpointManager
@@ -10,6 +14,110 @@ class CheckpointSpec extends SparkTestBase {
   private def ranks(r: RunResult): Map[Long, Double] =
     r.state.select("vid", "rank").collect()
       .map(x => x.getLong(0) -> x.getDouble(1)).toMap
+
+  /** Spark jobs started from Checkpoint.scala while `body` runs. A
+    * sentinel job in its own group ends the count: the listener bus
+    * delivers in order, so once the sentinel's start is seen every
+    * earlier job's start has been counted. */
+  private def checkpointJobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val sentinel = "checkpoint-spec-sentinel"
+    val n = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == sentinel))
+          drained.countDown()
+        else if (e.stageInfos.exists(_.name.contains("Checkpoint.scala")))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(sentinel, "listener drain", interruptOnCancel = false)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
+      n.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def snapshotDirs(dir: String): Seq[String] = {
+    val listing = Files.list(Paths.get(dir))
+    try listing.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("iter=")).toSeq.sorted
+    finally listing.close()
+  }
+
+  /** (relative path, size, mtime) of every file under `p`. */
+  private def fileStamps(p: Path): Set[(String, Long, Long)] = {
+    val walk = Files.walk(p)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(f => (p.relativize(f).toString, Files.size(f),
+        Files.getLastModifiedTime(f).toMillis)).toSet
+    finally walk.close()
+  }
+
+  test("a snapshot whose iteration ends the run is written exactly once") {
+    // kernel LPA, every = 3, last superstep on the cadence: one write
+    // job at 3 and one at 6 — no end-of-run rewrite of iter=00006. On
+    // a 40-vertex path the labels are still moving at superstep 6.
+    val es = (0L until 39L).map(i => (i, i + 1))
+    val lpaDir = Files.createTempDirectory("graft-ckpt-once-lpa").toString
+    val lpaMgr = new CheckpointManager(lpaDir, every = 3)
+    var lpaIters = -1
+    val lpaJobs = checkpointJobs {
+      lpaIters = LabelPropagation.runKernel(edgesDF(es), parts, maxIters = 6,
+        ckpt = Some(lpaMgr)).iterations
+    }
+    assert(lpaIters == 6)
+    assert(snapshotDirs(lpaDir) == Seq("iter=00003", "iter=00006"))
+    assert(lpaJobs == 2, s"expected one write job per snapshot, saw $lpaJobs jobs")
+
+    // engine PageRank, maxIters = 4, every = 2
+    val adj = Adjacency.build(edgesDF(randomEdges(50, 200, seed = 53)), parts)
+    val prDir = Files.createTempDirectory("graft-ckpt-once-pr").toString
+    val prMgr = new CheckpointManager(prDir, every = 2)
+    val prJobs = checkpointJobs(PageRank.run(adj, maxIters = 4, ckpt = Some(prMgr)))
+    adj.unpersist()
+    assert(snapshotDirs(prDir) == Seq("iter=00002", "iter=00004"))
+    assert(prJobs == 2, s"expected one write job per snapshot, saw $prJobs jobs")
+  }
+
+  test("latestIter skips uncommitted snapshots; a torn snapshot fails the resume by name") {
+    val es = randomEdges(50, 200, seed = 59)
+    val adj = Adjacency.build(edgesDF(es), parts)
+    val dir = Files.createTempDirectory("graft-ckpt-torn").toString
+    val mgr = new CheckpointManager(dir, every = 1)
+    PageRank.run(adj, maxIters = 2, ckpt = Some(mgr))
+    assert(mgr.latestIter().contains(2))
+    val two = Paths.get(dir, "iter=00002")
+    val manifest = Files.readString(two.resolve("manifest.json"))
+
+    // a save that died after writing state/, and one that died before
+    // its temporary manifest was moved into place
+    def copyTree(from: Path, to: Path): Unit = {
+      Files.createDirectories(to.getParent)
+      val walk = Files.walk(from)
+      try walk.iterator().asScala.foreach(f =>
+        Files.copy(f, to.resolve(from.relativize(f).toString)))
+      finally walk.close()
+    }
+    copyTree(two.resolve("state"), Paths.get(dir, "iter=00003", "state"))
+    Files.createDirectories(Paths.get(dir, "iter=00004"))
+    Files.writeString(Paths.get(dir, "iter=00004", "manifest.json.tmp"), manifest)
+    assert(mgr.latestIter().contains(2))
+
+    // a manifest whose row count disagrees with the files it points to
+    val rows = """"rows":(\d+),"partitions"""".r
+    val n = rows.findFirstMatchIn(manifest).get.group(1).toLong
+    Files.writeString(two.resolve("manifest.json"),
+      rows.replaceFirstIn(manifest, s""""rows":${n + 1},"partitions""""))
+    val e = intercept[IllegalArgumentException] {
+      PageRank.run(adj, maxIters = 4, ckpt = Some(mgr))
+    }
+    assert(e.getMessage.contains(two.toString), s"snapshot not named: ${e.getMessage}")
+    adj.unpersist()
+  }
 
   test("resume from mid-run checkpoint reproduces the uninterrupted run") {
     val es = randomEdges(120, 700, seed = 51)
@@ -197,9 +305,13 @@ class CheckpointSpec extends SparkTestBase {
     val und = GraphShaping.shape(edgesDF(es), EdgeShaping(directed = false, parallelEdges = false))
     val adj = Adjacency.build(und, parts)
     Engine.run(adj, new MinLabelProgram("cc"), RunConfig(maxIters = 0, ckpt = Some(mgr)))
+    val latest = Paths.get(dir, f"iter=${mgr.latestIter().get}%05d")
+    val before = fileStamps(latest)
     val resumed = Engine.run(adj, new MinLabelProgram("cc"), RunConfig(maxIters = 0, ckpt = Some(mgr)))
       .state.select("vid", "label").collect().map(x => (x.getLong(0), x.getLong(1))).toSet
     assert(resumed == straight)
+    // the no-op resume leaves the snapshot it resumed from untouched
+    assert(fileStamps(latest) == before)
     adj.unpersist()
   }
 }
